@@ -8,7 +8,8 @@ bottom); this is the equivalent product surface for the Spark engine:
 
 Runs Stage 1–5 (bootstrap, dims, fact, validations) against the given
 source directory into the given store directory, prints one JSON line
-per load with the run-log counters, then the Stage-5 validation summary.
+per load with its change counts and its run-log duration (``seconds``),
+then the Stage-5 validation summary.
 Exit code 0 iff every load succeeded and no validation returned rows.
 """
 
@@ -36,7 +37,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--skip-validate", action="store_true")
     args = ap.parse_args(argv)
 
-    from etl_mini_dw_spark.etl.orchestrate import Warehouse
+    from etl_mini_dw_spark import fixtures_spec as spec
+    from etl_mini_dw_spark.etl import runlog
+    from etl_mini_dw_spark.etl.orchestrate import Warehouse, run_name
     from etl_mini_dw_spark.session import get_spark
 
     spark = get_spark("etl_mini_dw_spark-cli")
@@ -48,13 +51,15 @@ def main(argv: list[str] | None = None) -> int:
         sk_strategy=args.sk_strategy,
     )
     results = wh.run_all(as_of=args.as_of, now_ts=args.now_ts)
+    runs = runlog.latest(spark, wh.store)
     ok = True
     for name, res in results.items():
         ok = ok and res.get("status") != "FAIL"
-        print(json.dumps({"load": name, **res}, default=str))
+        run = runs[run_name(spec.DIMS[name].name if name in spec.DIMS else name)]
+        seconds = round((run["end_time"] - run["start_time"]).total_seconds(), 3)
+        print(json.dumps({"load": name, **res, "seconds": seconds}, default=str))
 
     if not args.skip_validate:
-        from etl_mini_dw_spark import fixtures_spec as spec
         from etl_mini_dw_spark.plans import validation
 
         n_bad = 0

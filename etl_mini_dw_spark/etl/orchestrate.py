@@ -10,7 +10,17 @@ to a temp generation and swaps — on any exception nothing is swapped, a
 FAIL row is appended to the run log, and the error re-raised
 (`code/SQL_1…sql:1026–1044`). The tracker advances only after a
 successful swap, uniformly (fixing the reference's dim-vs-fact
-inconsistency, SURVEY §3.3).
+inconsistency, SURVEY §3.3). Every load — DimDate's build included —
+appends one run-log row.
+
+Cost model: a load pays Spark jobs for its data only. The tracker and
+the run log are driver-sized and are read and written on the driver
+(see tracker.py / runlog.py); each dimension's source is staged once
+per load (``staging.src_versions_as_of``) and the extract, the live
+snapshot and the initial state are derived from that one frame; a
+dimension load whose change counts show nothing inserted, closed or
+deleted writes nothing; the fact delta is resolved against the
+dimensions once.
 
 Scale notes: FactSales is stored partitioned by order-date *year* so date
 predicates become partition pruning (the reference only had a date index;
@@ -20,7 +30,8 @@ always broadcast).
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from contextlib import contextmanager
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,11 +48,17 @@ def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
-def _tag_counts(post: "DataFrame") -> dict:
+def _tag_counts(post: DataFrame) -> dict:
+    """Rows per ``change_tag`` of a tagged post-state (one job)."""
     return {
         r["change_tag"]: r["cnt"]
         for r in post.groupBy("change_tag").agg(F.count("*").alias("cnt")).collect()
     }
+
+
+def run_name(table: str) -> str:
+    """The run-log name of the load of ``table``."""
+    return f"etl_load_{table}"
 
 
 # Stage 5.1 expected-catalog manifest (`code/SQL_1…sql:1626–1638`, plus the
@@ -80,73 +97,78 @@ class Warehouse:
         """Stage 5.1 structure check against the actual store. Expect []."""
         return [t for t in EXPECTED_TABLES if not self.store.exists(t)]
 
+    @contextmanager
+    def _logged(self, table: str):
+        """Run-log the load of ``table``: the body fills the yielded counts;
+        a SUCCESS row is appended when it returns, a FAIL row (and the
+        error re-raised) when it raises."""
+        start = _utcnow()
+        counts: dict = {}
+        try:
+            yield counts
+        except Exception as e:  # X6 FAIL row + rethrow
+            runlog.append(
+                self.spark, self.store, run_name(table), start, _utcnow(),
+                status="FAIL", error=str(e)[:500],
+            )
+            raise
+        runlog.append(self.spark, self.store, run_name(table), start, _utcnow(), **counts)
+
     # --- bootstrap (Stage 1) ---------------------------------------------
     def init(self) -> None:
         tracker.seed(self.spark, self.store)
         if not self.store.exists("dim_date"):
-            self.store.write(
-                build_dim_date(self.spark, spec.DATE_START, spec.DATE_END), "dim_date"
-            )
+            with self._logged("dim_date") as counts:
+                self.store.write(
+                    build_dim_date(self.spark, spec.DATE_START, spec.DATE_END), "dim_date"
+                )
+                # one row per day of the horizon
+                days = date.fromisoformat(spec.DATE_END) - date.fromisoformat(spec.DATE_START)
+                counts["rows_inserted"] = days.days + 1
 
     # --- dimension loads (Stages 2–3, X2–X4) ------------------------------
     def load_dim(self, dim_key: str, as_of: str | None = None, now_ts: str | None = None) -> dict:
         dim = spec.DIMS[dim_key]
-        start = _utcnow()
-        run_name = f"etl_load_{dim.name}"
-        try:
+        with self._logged(dim.name) as counts:
             wm = tracker.read_watermark(self.spark, self.store, dim.name)
-            staged = staging.delta_extract(self.spark, self.sf_dir, dim, wm, as_of=as_of)
+            versions = staging.src_versions_as_of(self.spark, self.sf_dir, dim, as_of)
+            staged = staging.delta_from_versions(dim, versions, wm)
             if not self.store.exists(dim.name):
-                # initial load, A5 empty-table guard (`code/SQL_1…sql:603`)
-                post = scd2.dim_initial(
+                # initial load, A5 empty-table guard (`code/SQL_1…sql:603`):
+                # full history from the seed watermark, like dim_initial
+                post = scd2.initial_from_staged(
                     self.spark,
-                    self.sf_dir,
                     dim,
-                    as_of=as_of,
+                    staging.delta_from_versions(dim, versions, spec.LOW),
                     sk_strategy=self.sk_strategy,
                 ).withColumn("change_tag", F.lit("inserted"))
             else:
-                current = self.store.read(self.spark, dim.name)
-                snapshot = staging.current_snapshot(self.spark, self.sf_dir, dim, as_of=as_of)
                 post = scd2.scd2_increment(
-                    current,
+                    self.store.read(self.spark, dim.name),
                     staged,
-                    snapshot,
+                    staging.snapshot_from_versions(dim, versions),
                     dim,
                     now_ts or _utcnow().strftime("%Y-%m-%d %H:%M:%S"),
                     sk_strategy=self.sk_strategy,
                 )
-            post = post.localCheckpoint()  # materialize once: metrics + write + wm
-            metrics = {r["change_tag"]: r["cnt"] for r in post.groupBy("change_tag").agg(F.count("*").alias("cnt")).collect()}
-            new_wm = (
-                staged.agg(F.max("valid_from")).first()[0]
-                if metrics.get("inserted") or metrics.get("closed")
-                else None
-            )
-            self.store.write(post.drop("change_tag"), dim.name)
+            post = post.localCheckpoint()  # materialize once: metrics + write
+            metrics = _tag_counts(post)
+            ingested = metrics.get("inserted") or metrics.get("closed")
+            new_wm = staged.agg(F.max("valid_from")).first()[0] if ingested else None
+            # a no-op's post-state is the current table row for row: no write
+            if ingested or metrics.get("deleted"):
+                self.store.write(post.drop("change_tag"), dim.name)
             tracker.advance(self.spark, self.store, dim.name, new_wm, _utcnow())
-            runlog.append(
-                self.spark,
-                self.store,
-                run_name,
-                start,
-                _utcnow(),
+            counts.update(
                 rows_inserted=metrics.get("inserted", 0),
                 rows_updated=metrics.get("closed", 0),
                 rows_deleted=metrics.get("deleted", 0),
             )
             return metrics
-        except Exception as e:  # X6 FAIL row + rethrow
-            runlog.append(
-                self.spark, self.store, run_name, start, _utcnow(), status="FAIL", error=str(e)[:500]
-            )
-            raise
 
     # --- fact load (X5) ----------------------------------------------------
     def load_fact(self, as_of: str | None = None) -> dict:
-        start = _utcnow()
-        run_name = "etl_load_fact_sales"
-        try:
+        with self._logged("fact_sales") as counts:
             dims = {
                 fk: self.store.read(self.spark, ds.name) for fk, ds, _ in fact.DIM_LINKS
             }
@@ -172,9 +194,16 @@ class Warehouse:
                 # matched NK lives in its delta row's year); prior state is
                 # read with a PARTITION-PRUNED scan and only those partition
                 # dirs are swapped — cost ∝ touched partitions, never table
-                # size. An empty delta writes nothing at all.
+                # size. An empty delta writes nothing at all. The years come
+                # from the delta's DimDate join alone: the dimension
+                # resolution is a chain of left joins, which keeps every
+                # row, so it runs once — inside the merge.
                 touched = sorted(
-                    r[0] for r in resolved.select(year.alias("y")).distinct().collect()
+                    r[0]
+                    for r in fact._with_datekey(delta, dd)
+                    .select(year.alias("y"))
+                    .distinct()
+                    .collect()
                 )
                 if not touched:
                     metrics = {}
@@ -197,21 +226,11 @@ class Warehouse:
                 else None
             )
             tracker.advance(self.spark, self.store, "fact_sales", new_wm, _utcnow())
-            runlog.append(
-                self.spark,
-                self.store,
-                run_name,
-                start,
-                _utcnow(),
+            counts.update(
                 rows_inserted=metrics.get("inserted", 0),
                 rows_updated=metrics.get("updated", 0),
             )
             return metrics
-        except Exception as e:
-            runlog.append(
-                self.spark, self.store, run_name, start, _utcnow(), status="FAIL", error=str(e)[:500]
-            )
-            raise
 
     # --- full run (X9 DAG: dims first, fact always last) -------------------
     def run_all(self, as_of: str | None = None, now_ts: str | None = None) -> dict[str, dict]:

@@ -8,9 +8,11 @@ table — metrics cost no extra pass over the data.
 
 Scale notes: counters are LongType (a 100 TB fact load overflows int32),
 and each run APPENDS one new parquet file to the log directory — O(1)
-per run, never a read+rewrite of the whole history. The ``run_id``
-max+1 read is a scan of a tiny metadata table (1 row/run), the same
-scalar lookup the reference's IDENTITY performs.
+per run, never a read+rewrite of the whole history. The log is driver-
+sized metadata (1 row/run), so the append and the ``run_id`` max+1 read
+(the reference's IDENTITY) run on the driver through the store's
+``append_rows`` / ``read_rows``: no Spark job, and Spark still reads the
+log with ``SCHEMA``'s types.
 """
 
 from __future__ import annotations
@@ -18,7 +20,6 @@ from __future__ import annotations
 from datetime import datetime
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_mini_dw_spark.etl.store import ParquetStore
@@ -55,24 +56,24 @@ def append(
     """S8 literal-row append; run_id = IDENTITY replacement (max+1)."""
     next_id = 1
     if store.exists(RUNLOG_TABLE):
-        next_id = (
-            store.read(spark, RUNLOG_TABLE).agg(F.max("run_id")).first()[0] or 0
-        ) + 1
-    row = spark.createDataFrame(
-        [
-            (
-                next_id,
-                run_name,
-                start_time,
-                end_time,
-                rows_inserted,
-                rows_updated,
-                rows_deleted,
-                status,
-                error,
-            )
-        ],
-        SCHEMA,
+        ids = [r["run_id"] for r in store.read_rows(spark, RUNLOG_TABLE, columns=["run_id"])]
+        next_id = max(ids, default=0) + 1
+    row = (
+        next_id,
+        run_name,
+        start_time,
+        end_time,
+        rows_inserted,
+        rows_updated,
+        rows_deleted,
+        status,
+        error,
     )
     # one new file per run — never a rewrite of the existing log
-    row.write.mode("append").parquet(store.path(RUNLOG_TABLE))
+    store.append_rows(spark, [row], SCHEMA, RUNLOG_TABLE)
+
+
+def latest(spark: SparkSession, store: ParquetStore) -> dict[str, dict]:
+    """The most recent row of every run name."""
+    rows = sorted(store.read_rows(spark, RUNLOG_TABLE), key=lambda r: r["run_id"])
+    return {r["run_name"]: r for r in rows}

@@ -18,6 +18,12 @@ garbage-collected on the next write. At 100 TB the same protocol holds
 per-table; on object stores you'd swap a manifest/metastore pointer
 instead of a directory (exactly what Delta/Iceberg formalize — this
 store is the minimal stand-in).
+
+Driver-sized metadata tables (the tracker, the run log) use the same
+directories and the same swap, but are read and written with pyarrow on
+the driver (``read_rows`` / ``write_rows`` / ``append_rows``): a lookup
+of a few rows then costs no Spark job. Spark reads those files back with
+the declared column types.
 """
 
 from __future__ import annotations
@@ -26,8 +32,46 @@ import glob
 import os
 import shutil
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+# Spark type -> the Arrow type Spark reads back as that type. A timestamp
+# is written UTC-adjusted, which Spark reads as TimestampType (not NTZ).
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.LongType(): pa.int64(),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_table(rows: list[tuple], schema: T.StructType) -> pa.Table:
+    """``rows`` as an Arrow table with ``schema``'s names and Spark types.
+
+    A naive datetime is read in the local zone, as PySpark's
+    ``createDataFrame`` reads it, so both paths store the same instant."""
+    arrow = pa.schema(
+        [pa.field(f.name, _ARROW_TYPES[f.dataType], f.nullable) for f in schema.fields]
+    )
+    return pa.Table.from_pylist(
+        [
+            {n: v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+             for n, v in zip(schema.names, r)}
+            for r in rows
+        ],
+        schema=arrow,
+    )
+
+
+def _local_naive(ts: datetime) -> datetime:
+    """A stored instant as the naive local datetime PySpark's ``collect``
+    returns; a naive value (a Spark-written INT96 column) is UTC."""
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=timezone.utc)
+    return ts.astimezone().replace(tzinfo=None)
 
 
 class ParquetStore:
@@ -90,15 +134,25 @@ class ParquetStore:
         are named by a monotonic counter, never a clock, so retention is
         deterministic and replay-safe.
         """
-        self._recover(name)
-        final = self.path(name)
-        for stale in glob.glob(f"{final}._tmp_*"):  # uncommitted in-flight writes
-            shutil.rmtree(stale, ignore_errors=True)
-        tmp = f"{final}._tmp_{uuid.uuid4().hex[:8]}"
+        tmp = self._begin(name)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
+        self._commit(name, tmp, keep_generations)
+
+    def _begin(self, name: str) -> str:
+        """Recover ``name``, drop its uncommitted in-flight writes, and
+        return a fresh temp path for the next generation."""
+        self._recover(name)
+        final = self.path(name)
+        for stale in glob.glob(f"{final}._tmp_*"):
+            shutil.rmtree(stale, ignore_errors=True)
+        return f"{final}._tmp_{uuid.uuid4().hex[:8]}"
+
+    def _commit(self, name: str, tmp: str, keep_generations: int = 0) -> None:
+        """Swap the fully written ``tmp`` dir in as the current generation."""
+        final = self.path(name)
         old = f"{final}._old_{uuid.uuid4().hex[:8]}"
         if os.path.isdir(final):
             os.rename(final, old)
@@ -114,6 +168,53 @@ class ParquetStore:
             # prune only under an explicit retention policy: a default
             # write must not wipe snapshots another caller retained
             self._prune_generations(name, keep_generations)
+
+    # --- driver-sized metadata tables (tracker, run log) -------------------
+    # A few rows per table: read and written with pyarrow on the driver, so
+    # a bookkeeping lookup costs no Spark job. Same files, same swap.
+
+    def read_rows(
+        self, spark: SparkSession, name: str, columns: list[str] | None = None
+    ) -> list[dict]:
+        """All rows of a small table as dicts (file by file, so files
+        written by Spark and by pyarrow may sit side by side)."""
+        self._recover(name)
+        rows: list[dict] = []
+        for f in sorted(glob.glob(os.path.join(self.path(name), "*.parquet"))):
+            t = pq.read_table(f, columns=columns, coerce_int96_timestamp_unit="us")
+            rows += [
+                {k: _local_naive(v) if isinstance(v, datetime) else v for k, v in r.items()}
+                for r in t.to_pylist()
+            ]
+        return rows
+
+    def _stage_rows(self, rows: list[tuple], schema: T.StructType, name: str) -> tuple[str, str]:
+        """Write ``rows`` as one file into a fresh temp dir: (dir, file name)."""
+        tmp = self._begin(name)
+        os.makedirs(tmp)
+        part = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(_arrow_table(rows, schema), os.path.join(tmp, part))
+        return tmp, part
+
+    def write_rows(
+        self, spark: SparkSession, rows: list[tuple], schema: T.StructType, name: str
+    ) -> None:
+        """Replace a small table with ``rows`` through the generation swap."""
+        self._commit(name, self._stage_rows(rows, schema, name)[0])
+
+    def append_rows(
+        self, spark: SparkSession, rows: list[tuple], schema: T.StructType, name: str
+    ) -> None:
+        """Add ``rows`` to a small table as ONE new file; existing files are
+        never rewritten. The file is written aside and renamed in, so a
+        reader sees it whole or not at all."""
+        tmp, part = self._stage_rows(rows, schema, name)
+        final = self.path(name)
+        if not os.path.isdir(final):  # the first file creates the table
+            self._commit(name, tmp)
+            return
+        os.rename(os.path.join(tmp, part), os.path.join(final, part))
+        shutil.rmtree(tmp, ignore_errors=True)
 
     def generations(self, name: str) -> list[str]:
         """Retained past-generation dirs, oldest → newest."""
@@ -324,6 +425,25 @@ class DeltaStore(ParquetStore):
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.save(self.path(name))
+
+    # metadata tables go through Spark here: each write is a log commit
+    def read_rows(
+        self, spark: SparkSession, name: str, columns: list[str] | None = None
+    ) -> list[dict]:
+        df = self.read(spark, name)
+        return [r.asDict() for r in (df.select(*columns) if columns else df).collect()]
+
+    def write_rows(
+        self, spark: SparkSession, rows: list[tuple], schema: T.StructType, name: str
+    ) -> None:
+        self.write(spark.createDataFrame(rows, schema), name)
+
+    def append_rows(
+        self, spark: SparkSession, rows: list[tuple], schema: T.StructType, name: str
+    ) -> None:
+        spark.createDataFrame(rows, schema).write.format("delta").mode("append").save(
+            self.path(name)
+        )
 
     def swap_partitions(
         self, df: DataFrame, name: str, partition_col: str, values: list

@@ -5,11 +5,14 @@ ingested — *data-driven*, never wall-clock, `code/SQL_1…sql:643–651`) and
 ``last_successful_execution_time``. Seeded at 1900-01-01 so the first run
 ingests full history (`code/SQL_1…sql:250–255`).
 
-The tracker is tiny (one row per table) — it lives as a plain parquet
-table and is read to the driver (the reference's scalar-subquery lookup,
-P11). Updated only *after* the target table's swap commits, uniformly for
-dims and fact (the reference is inconsistent here — SURVEY §3.3 — we fix
-that deliberately).
+The tracker is tiny (one row per table), so it never goes through Spark:
+it is a plain parquet table the store reads and rewrites on the driver
+(``ParquetStore.read_rows`` / ``write_rows``, pyarrow) — the reference's
+scalar-subquery lookup (P11) at the cost of a file read, not a job. Each
+update is a new generation through the store's swap, and Spark still
+reads the table with ``SCHEMA``'s types. Updated only *after* the target
+table's swap commits, uniformly for dims and fact (the reference is
+inconsistent here — SURVEY §3.3 — we fix that deliberately).
 """
 
 from __future__ import annotations
@@ -17,7 +20,6 @@ from __future__ import annotations
 from datetime import datetime
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_mini_dw_spark.etl.store import ParquetStore
@@ -41,18 +43,12 @@ def seed(spark: SparkSession, store: ParquetStore) -> None:
     if store.exists(TRACKER_TABLE):
         return
     low = datetime.strptime(LOW, "%Y-%m-%d %H:%M:%S")
-    rows = [(t, low, None) for t in TRACKED_TABLES]
-    store.write(spark.createDataFrame(rows, SCHEMA), TRACKER_TABLE)
+    store.write_rows(spark, [(t, low, None) for t in TRACKED_TABLES], SCHEMA, TRACKER_TABLE)
 
 
 def read_watermark(spark: SparkSession, store: ParquetStore, table: str) -> str:
-    row = (
-        store.read(spark, TRACKER_TABLE)
-        .filter(F.col("table_name") == table)
-        .select("last_successful_load")
-        .first()
-    )
-    return row[0].strftime("%Y-%m-%d %H:%M:%S")
+    rows = {r["table_name"]: r for r in store.read_rows(spark, TRACKER_TABLE)}
+    return rows[table]["last_successful_load"].strftime("%Y-%m-%d %H:%M:%S")
 
 
 def advance(
@@ -64,23 +60,20 @@ def advance(
 ) -> None:
     """Execution time always; load watermark only if the batch was non-empty
     (`code/SQL_1…sql:643–651,887–894`)."""
-    df = store.read(spark, TRACKER_TABLE)
-    is_target = F.col("table_name") == table
-    df = df.withColumn(
-        "last_successful_execution_time",
-        F.when(is_target, F.lit(exec_time)).otherwise(F.col("last_successful_execution_time")),
+    rows = store.read_rows(spark, TRACKER_TABLE)
+    for r in rows:
+        if r["table_name"] != table:
+            continue
+        r["last_successful_execution_time"] = exec_time
+        if new_load_ts is not None:
+            # MONOTONIC advance: a delta batch can contain only old rows
+            # (e.g. a re-qualifying closed archive row), whose
+            # MAX(valid_from) lies BEFORE the current watermark — the
+            # reference's raw MAX would regress the tracker and re-open
+            # already-ingested history (`code/SQL_1…sql:643–651` has this
+            # latent bug; we fix it). Like SQL GREATEST, a NULL is skipped.
+            cur = r["last_successful_load"]
+            r["last_successful_load"] = new_load_ts if cur is None else max(cur, new_load_ts)
+    store.write_rows(
+        spark, [tuple(r[c] for c in SCHEMA.names) for r in rows], SCHEMA, TRACKER_TABLE
     )
-    if new_load_ts is not None:
-        # MONOTONIC advance: a delta batch can contain only old rows (e.g.
-        # a re-qualifying closed archive row), whose MAX(valid_from) lies
-        # BEFORE the current watermark — the reference's raw MAX would
-        # regress the tracker and re-open already-ingested history
-        # (`code/SQL_1…sql:643–651` has this latent bug; we fix it).
-        df = df.withColumn(
-            "last_successful_load",
-            F.when(
-                is_target,
-                F.greatest(F.col("last_successful_load"), F.lit(new_load_ts)),
-            ).otherwise(F.col("last_successful_load")),
-        )
-    store.write(df.localCheckpoint(), TRACKER_TABLE)

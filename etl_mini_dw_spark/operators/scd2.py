@@ -132,6 +132,13 @@ def dim_initial(
     unknown member; assign SKs.
     """
     staged = staging.delta_extract(spark, sf_dir, dim, LOW, as_of=as_of)
+    return initial_from_staged(spark, dim, staged, sk_strategy=sk_strategy)
+
+
+def initial_from_staged(
+    spark: SparkSession, dim: DimSpec, staged: DataFrame, sk_strategy: str = "ordered"
+) -> DataFrame:
+    """``dim_initial`` over an already staged full-history extract."""
     shaped = staged.withColumnRenamed("valid_from", "active_from").withColumnRenamed(
         "valid_to", "active_to"
     )

@@ -21,6 +21,11 @@ Three layers:
 - ``current_snapshot`` — S3 views: live NKs for delete detection
   (`code/SQL_1…sql:307–311`), using the reference's own ``> 9999-12-30``
   sentinel guard (`code/SQL_1…sql:90,310`)
+
+The last two also exist as ``delta_from_versions`` / ``snapshot_from_versions``
+over a versions frame the caller built once: a warehouse load derives its
+extract, snapshot and initial state from one ``src_versions_as_of``
+instead of re-reading the sources for each.
 """
 
 from __future__ import annotations
@@ -168,28 +173,40 @@ def _warehouse_shape(dim: DimSpec, versions: DataFrame) -> DataFrame:
     )
 
 
-def delta_extract(
-    spark: SparkSession, sf_dir: str, dim: DimSpec, watermark: str, as_of: str | None = None
-) -> DataFrame:
-    """The reference's ``src_<dim>`` staging view (S2 + F1).
+def delta_from_versions(dim: DimSpec, versions: DataFrame, watermark: str) -> DataFrame:
+    """The reference's ``src_<dim>`` staging view (S2 + F1) over a versions
+    frame (``src_versions_as_of``), so one load stages its source once.
 
     Watermark predicate (`code/SQL_1…sql:280–281`):
     ``ValidFrom > wm OR (ValidTo > wm AND ValidTo < HIGH)``.
     """
-    v = src_versions_as_of(spark, sf_dir, dim, as_of)
     wm = _ts(watermark)
     qualifies = (F.col("valid_from") > wm) | (
         (F.col("valid_to") > wm) & (F.col("valid_to") < _ts(HIGH))
     )
-    return _warehouse_shape(dim, v.filter(qualifies))
+    return _warehouse_shape(dim, versions.filter(qualifies))
+
+
+def snapshot_from_versions(dim: DimSpec, versions: DataFrame) -> DataFrame:
+    """S3 view over a versions frame: NKs currently live in the source
+    (delete detection input)."""
+    return versions.filter(F.col("valid_to") > _ts(HIGH_GUARD)).select(
+        F.col("k").alias(dim.nk)
+    )
+
+
+def delta_extract(
+    spark: SparkSession, sf_dir: str, dim: DimSpec, watermark: str, as_of: str | None = None
+) -> DataFrame:
+    """``delta_from_versions`` over the source as of ``as_of``."""
+    return delta_from_versions(dim, src_versions_as_of(spark, sf_dir, dim, as_of), watermark)
 
 
 def current_snapshot(
     spark: SparkSession, sf_dir: str, dim: DimSpec, as_of: str | None = None
 ) -> DataFrame:
-    """S3 view: NKs currently live in the source (delete detection input)."""
-    v = src_versions_as_of(spark, sf_dir, dim, as_of)
-    return v.filter(F.col("valid_to") > _ts(HIGH_GUARD)).select(F.col("k").alias(dim.nk))
+    """``snapshot_from_versions`` over the source as of ``as_of``."""
+    return snapshot_from_versions(dim, src_versions_as_of(spark, sf_dir, dim, as_of))
 
 
 CDC_T1 = "1994-01-05 00:00:00"  # EPOCH1 + 4 days: mid-birth instant so the

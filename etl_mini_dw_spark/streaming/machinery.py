@@ -103,25 +103,30 @@ def scratch_dir(prefix: str) -> str:
     if base:
         os.makedirs(base, exist_ok=True)
         _purge_stale(base)
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
-    return tempfile.mkdtemp(prefix=prefix)
+    return tempfile.mkdtemp(prefix=SCRATCH_PREFIX + prefix, dir=base or None)
 
 
+# Every scratch dir this module makes starts with this tag; the purge
+# touches nothing else, so a user-supplied base keeps its other files.
+SCRATCH_PREFIX = "etl_mini_dw_"
 _PURGE_AGE_SECONDS = 24 * 3600
 
 
 def _purge_stale(base: str) -> None:
     """Best-effort sweep of scratch left by crashed/old runs (ADVICE r9:
-    RAM-backed scratch otherwise accumulates across runs). Only entries
-    older than a day are touched, so a concurrent live session's scratch
-    (hours at most) is never at risk; all errors are swallowed — purging
-    is hygiene, never correctness."""
+    RAM-backed scratch otherwise accumulates across runs). Only this
+    module's own dirs (``SCRATCH_PREFIX``) older than a day are touched,
+    so a concurrent live session's scratch (hours at most) and any
+    foreign file under the base are never at risk; all errors are
+    swallowed — purging is hygiene, never correctness."""
     import shutil
     import time
 
     try:
         cutoff = time.time() - _PURGE_AGE_SECONDS
         for name in os.listdir(base):
+            if not name.startswith(SCRATCH_PREFIX):
+                continue
             path = os.path.join(base, name)
             try:
                 if os.path.getmtime(path) < cutoff:

@@ -15,6 +15,19 @@ def test_cli_run_all_and_validate(spark, sf_dir, tmp_path, capsys):
     assert rc == 0
     loads = {o["load"] for o in out if "load" in o}
     assert loads == {"customer", "salesperson", "product", "fact_sales"}
+    assert all(o["seconds"] >= 0 for o in out if "load" in o)
+    # every load wrote a run-log row, DimDate's build included
+    from etl_mini_dw_spark.etl import runlog
+    from etl_mini_dw_spark.etl.store import ParquetStore
+
+    runs = runlog.latest(spark, ParquetStore(str(tmp_path / "dw")))
+    assert set(runs) == {
+        "etl_load_dim_date",
+        "etl_load_dim_customer",
+        "etl_load_dim_salesperson",
+        "etl_load_dim_product",
+        "etl_load_fact_sales",
+    }
     assert all(o["violations"] == 0 for o in out if "violations" in o)
     assert [o["missing"] for o in out if "missing" in o] == [[]]
 

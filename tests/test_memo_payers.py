@@ -9,13 +9,15 @@ whose name is in neither place would mean a staged build escaping to an
 untimed region (or silently re-billed when registration order changes —
 the r3 `ext_simhash_sketches` attribution flap).
 
-This test statically extracts every stage name from the package source,
-so adding a stage_memo without declaring its payer fails CI.
+This test statically extracts every stage name from the package's
+syntax trees (any spelling of the call: positional or keyword, direct,
+module-qualified or aliased), so adding a stage_memo without declaring
+its payer fails CI.
 """
 
 from __future__ import annotations
 
-import re
+import ast
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "etl_mini_dw_spark"
@@ -60,22 +62,56 @@ PAYERS = {
 }
 
 
+def _stage_name(node: ast.expr, where: str) -> str:
+    """A stage-name argument as written: a literal, or an f-string with
+    its placeholders kept (``"pq_codebook_{m}"``). Anything else is a
+    computed name no payer can be declared for, so it is returned as a
+    label that matches no PAYERS key."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{" + ast.unparse(v.value) + "}"
+            for v in node.values
+        )
+    return f"<computed stage name at {where}>"
+
+
 def _declared_stage_names() -> set[str]:
-    """Every literal/f-string stage name passed to stage_memo (incl. the
-    dedup module's `_memo` alias)."""
-    pat = re.compile(
-        r"(?:stage_memo|_memo)\(\s*\n?\s*spark,\s*\n?\s*sf_dir,\s*\n?\s*f?\"([^\"]+)\"",
-        re.MULTILINE,
-    )
+    """Every stage name passed to stage_memo, found in each module's
+    syntax tree: positional or ``stage=`` keyword, called by name, as a
+    module attribute, or through a local alias (``_memo = stage_memo``,
+    ``import stage_memo as m``)."""
     names: set[str] = set()
     for path in PKG.rglob("*.py"):
-        names.update(pat.findall(path.read_text()))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        aliases = {"stage_memo"}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                aliases |= {a.asname for a in node.names if a.name == "stage_memo" and a.asname}
+            elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Name):
+                if node.value.id == "stage_memo":
+                    aliases |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if not (
+                (isinstance(f, ast.Name) and f.id in aliases)
+                or (isinstance(f, ast.Attribute) and f.attr == "stage_memo")
+            ):
+                continue
+            where = f"{path.relative_to(PKG.parent)}:{node.lineno}"
+            arg = node.args[2] if len(node.args) > 2 else next(
+                (k.value for k in node.keywords if k.arg == "stage"), None
+            )
+            names.add(_stage_name(arg, where) if arg is not None else f"<no stage name at {where}>")
     return names
 
 
 def test_every_stage_memo_has_a_declared_payer():
     names = _declared_stage_names()
-    assert names, "stage-name extraction regex matched nothing — fix the test"
+    assert names, "stage-name extraction found no stage_memo call — fix the test"
     undeclared = names - set(PAYERS)
     assert not undeclared, (
         f"stage_memo name(s) {sorted(undeclared)} have no declared bench "

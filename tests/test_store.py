@@ -121,3 +121,67 @@ def test_generation_retention_and_time_travel(spark, tmp_path):
     assert store.read_generation(spark, "t", back=0).agg({"gen": "max"}).first()[0] == 4
     store.drop("t")
     assert store.generations("t") == []
+
+
+def test_driver_written_metadata_reads_back_through_spark(spark, tmp_path):
+    """Tracker and run-log rows written on the driver (pyarrow) read back
+    through Spark with the declared types — TimestampType, not NTZ — and
+    the same values as the Spark write path they replace, FAIL row and
+    NULLs included."""
+    from datetime import datetime
+
+    from etl_mini_dw_spark.etl import runlog, tracker
+
+    t0, t1 = datetime(2001, 2, 3, 4, 5, 6, 789012), datetime(2001, 2, 3, 4, 5, 7)
+    cases = [
+        (
+            tracker.SCHEMA,
+            [("dim_customer", datetime(1998, 1, 27), t0), ("fact_sales", datetime(1900, 1, 1), None)],
+        ),
+        (
+            runlog.SCHEMA,
+            [
+                (1, "etl_load_dim_customer", t0, t1, 2**40, 3, 0, "SUCCESS", None),
+                (2, "etl_load_fact_sales", t0, t1, 0, 0, 0, "FAIL", "boom"),
+            ],
+        ),
+    ]
+    for i, (schema, rows) in enumerate(cases):
+        driver, via_spark = ParquetStore(str(tmp_path / f"d{i}")), ParquetStore(str(tmp_path / f"s{i}"))
+        driver.write_rows(spark, rows[:1], schema, "t")
+        driver.append_rows(spark, rows[1:], schema, "t")
+        spark.createDataFrame(rows, schema).write.parquet(via_spark.path("t"))
+        got = driver.read(spark, "t")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in schema
+        ]
+        want = via_spark.read(spark, "t")
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())) == rows
+        # the driver reads both its own files and ones Spark wrote
+        for store in (driver, via_spark):
+            assert sorted(tuple(r.values()) for r in store.read_rows(spark, "t")) == rows
+
+
+def test_warehouse_metadata_driver_and_spark_views_agree(spark, tmp_path):
+    """A warehouse's tracker and run log — FAIL row included — read the
+    same through ``wh.table`` (Spark) as on the driver."""
+    import pytest
+
+    from etl_mini_dw_spark.etl import runlog, tracker
+    from etl_mini_dw_spark.etl.orchestrate import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "dw"), str(tmp_path / "no_sources"))
+    wh.init()
+    with pytest.raises(Exception):
+        wh.load_dim("customer")
+    for table, schema in ((runlog.RUNLOG_TABLE, runlog.SCHEMA), (tracker.TRACKER_TABLE, tracker.SCHEMA)):
+        df = wh.table(table)
+        assert [f.dataType for f in df.schema] == [f.dataType for f in schema]
+        assert sorted(map(tuple, df.collect())) == sorted(
+            tuple(r[c] for c in schema.names) for r in wh.store.read_rows(spark, table)
+        )
+    log = {r["run_name"]: r for r in wh.store.read_rows(spark, runlog.RUNLOG_TABLE)}
+    assert log["etl_load_dim_date"]["run_status"] == "SUCCESS"
+    assert log["etl_load_dim_date"]["rows_inserted"] == wh.table("dim_date").count()
+    assert log["etl_load_dim_customer"]["run_status"] == "FAIL"
+    assert log["etl_load_dim_customer"]["run_error_message"]

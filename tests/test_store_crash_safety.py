@@ -212,3 +212,27 @@ def test_fact_load_crash_leaves_watermark_and_table_unchanged(
         .count()
         == 1
     )
+
+
+@pytest.mark.parametrize("kill_at", [1, 2])
+def test_tracker_swap_crash_keeps_previous_generation(spark, tmp_path, monkeypatch, kill_at):
+    """The tracker is rewritten on the driver through the same generation
+    swap: a kill at either rename leaves the previous tracker readable,
+    on the driver and through Spark, and the next advance heals it."""
+    from datetime import datetime
+
+    store = ParquetStore(str(tmp_path))
+    tracker.seed(spark, store)
+    tracker.advance(spark, store, "dim_customer", datetime(1998, 1, 27), datetime(2001, 1, 1))
+    before = sorted(map(tuple, store.read(spark, tracker.TRACKER_TABLE).collect()))
+    with monkeypatch.context() as m:
+        _install_killer(m, kill_at, tracker.TRACKER_TABLE)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            tracker.advance(
+                spark, store, "dim_customer", datetime(1999, 9, 9), datetime(2002, 2, 2)
+            )
+    assert sorted(map(tuple, store.read(spark, tracker.TRACKER_TABLE).collect())) == before
+    assert tracker.read_watermark(spark, store, "dim_customer") == "1998-01-27 00:00:00"
+    tracker.advance(spark, store, "dim_customer", datetime(1999, 9, 9), datetime(2002, 2, 2))
+    assert tracker.read_watermark(spark, store, "dim_customer") == "1999-09-09 00:00:00"
+    assert not [d for d in os.listdir(tmp_path) if "._old" in d or "._tmp" in d]

@@ -77,14 +77,34 @@ def test_scratch_dir_skips_full_shm(monkeypatch, tmp_path):
     assert os.path.isdir(d)
 
 
+def _age(path, seconds):
+    t = os.path.getmtime(path) - seconds
+    os.utime(path, (t, t))
+
+
 def test_scratch_purges_only_stale_entries(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
-    stale = tmp_path / "old_run"
+    stale = tmp_path / f"{machinery.SCRATCH_PREFIX}old_run"
     stale.mkdir()
-    old = 2 * machinery._PURGE_AGE_SECONDS
-    os.utime(stale, (os.path.getmtime(stale) - old, os.path.getmtime(stale) - old))
-    fresh = tmp_path / "live_run"
+    _age(stale, 2 * machinery._PURGE_AGE_SECONDS)
+    fresh = tmp_path / f"{machinery.SCRATCH_PREFIX}live_run"
     fresh.mkdir()
     machinery.scratch_dir("unit_purge_")
     assert not stale.exists()
     assert fresh.exists()
+
+
+def test_scratch_purge_keeps_foreign_entries(monkeypatch, tmp_path):
+    """A user-supplied scratch base may hold files this module did not
+    make: the purge must leave them, however old they are."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
+    foreign_file = tmp_path / "notes.txt"
+    foreign_file.write_text("keep me")
+    foreign_dir = tmp_path / "old_run"
+    foreign_dir.mkdir()
+    for p in (foreign_file, foreign_dir):
+        _age(p, 2 * machinery._PURGE_AGE_SECONDS)
+    d = machinery.scratch_dir("unit_purge_")
+    assert os.path.basename(d).startswith(machinery.SCRATCH_PREFIX)
+    assert foreign_file.read_text() == "keep me"
+    assert foreign_dir.exists()

@@ -80,8 +80,8 @@ def test_expected_tables_present(wh):
 def test_runlog_and_tracker(wh, spark):
     log = wh.table("etl_run_log")
     assert log.filter(F.col("run_status") == "FAIL").count() == 0
-    # 3 full runs × 4 tables
-    assert log.count() == 12
+    # 3 full runs × 4 tables, plus DimDate's one build
+    assert log.count() == 13
     tr = wh.table("etl_load_tracker")
     rows = {r["table_name"]: r for r in tr.collect()}
     assert set(rows) == {"dim_customer", "dim_salesperson", "dim_product", "fact_sales"}
@@ -141,3 +141,24 @@ def test_bucketed_sk_warehouse_equals_ordered(wh, spark, sf_dir, tmp_path_factor
         b = w2.table(dim.name)
         assert a.columns == b.columns
         assert a.exceptAll(b).count() + b.exceptAll(a).count() == 0, dim.name
+
+
+def test_noop_rerun_rewrites_no_data_file(wh):
+    """A rerun with nothing new leaves every dimension and fact parquet
+    file as it was (same inode, same mtime) and still logs each load."""
+    import os
+
+    def data_files():
+        out = {}
+        for name in [d.name for d in spec.DIMS.values()] + ["fact_sales"]:
+            for f in wh.store.data_files(name):
+                st = os.stat(f)
+                out[f] = (st.st_ino, st.st_mtime_ns)
+        return out
+
+    files, n_log = data_files(), wh.table("etl_run_log").count()
+    assert files
+    metrics = wh.run_all(now_ts=spec.NOW_FIXED)
+    assert all(not m.get(t) for m in metrics.values() for t in ("inserted", "updated", "closed", "deleted"))
+    assert data_files() == files
+    assert wh.table("etl_run_log").count() == n_log + 4
